@@ -13,8 +13,10 @@ spark-submit, not the config file.
 
 ``SeedConfig.engine_config()`` maps a seed onto this engine's
 EngineConfig: wait/randompause become the F4 politeness budget,
-maxfailures the retry cap, ``pages`` the global budget, ``frontierheap``
-the oracle's spill emulation knob (frontier/spill.py).
+maxfailures the retry cap, ``pages`` the per-site page budget
+(``max_pages_per_host``: the reference builds one ``CrawlFrontier`` per
+seed, ``CrawlController.java:74-77``), ``frontierheap`` the oracle's
+spill emulation knob (frontier/spill.py).
 """
 
 from __future__ import annotations
